@@ -14,6 +14,13 @@ Scale decisions baked in here:
     flows into shingling/sketching/LSH.  The expensive stages therefore run
     on |distinct contents|, not |files|.
   * The sketch table is persisted once and reused by banding and scoring.
+  * Stage outputs become plan leaves: once the timed counts fill the
+    sketch, identity, exact-edge and pair tables, later stages build on
+    ``as_plan_leaf`` views of them, so each step plans a few nodes instead
+    of re-planning the whole lineage (the RDD lineage, and so recompute on
+    block loss, is kept).
+  * Width checks read the physical plan (``ensure_min_partitions``) and
+    run no Spark job.
   * All pair sets are canonical (id_a < id_b, distinct) before CC.
 """
 
@@ -200,7 +207,7 @@ def dedup_pipeline(
         # + shingles + minhash per doc); blocks are columnar-serialized
         # either way and recompute from lineage on executor loss — see
         # persist_level() for the DISK_ONLY default and the override
-        from duplicatesuricate_spark.functions.util import persist_level
+        from duplicatesuricate_spark.functions.util import as_plan_leaf, persist_level
 
         sketched = sketched.persist(persist_level())
         owned.append(sketched)
@@ -214,6 +221,11 @@ def dedup_pipeline(
         _t0 = _time.monotonic()
         sketched.count()
         stage_walls["sketches"] = int((_time.monotonic() - _t0) * 1000)
+        # every table so far is now filled: later stages build on plan
+        # leaves instead of re-planning this lineage at every step (the
+        # persisted originals stay in ``owned`` for unpersist)
+        sketched, ids_slim, exact_edges = (
+            as_plan_leaf(t) for t in (sketched, ids_slim, exact_edges))
 
     # two candidate channels under ONE banded join: MinHash LSH bands
     # (probabilistic, Jaccard) + SimHash blocks (pigeonhole-complete for
@@ -272,6 +284,7 @@ def dedup_pipeline(
         _t0 = _time.monotonic()
         all_pairs.count()
         stage_walls["pairs"] = int((_time.monotonic() - _t0) * 1000)
+        all_pairs = as_plan_leaf(all_pairs)
 
     comps = connected_components(all_pairs)
     assignments = assignments_with_singletons(ids_slim, comps)

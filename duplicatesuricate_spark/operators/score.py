@@ -10,9 +10,8 @@ connectors.py:215-232, linker.py:99-106) — as a single set-at-a-time pass:
     similarity channel.
 
 Both kernels are pure Column expressions (``zip_with``/``aggregate``/
-``bit_count`` — whole-stage codegen, zero Python).  An Arrow/numpy variant
-(`score_pairs_arrow`) exists for A/B benchmarking; the SQL form is the
-default because it never leaves the JVM.
+``bit_count`` — whole-stage codegen, zero Python): scoring never leaves
+the JVM.
 
 Hydration joins the slim sketch table twice on ``doc_id``; when the sketch
 side is small enough, pass ``broadcast_sketches=True`` to skip both
@@ -21,11 +20,8 @@ shuffles entirely.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from duplicatesuricate_spark.config import DedupConfig, DEFAULT_CONFIG
 
@@ -192,35 +188,3 @@ def score_and_verify(
         .select("id_a", "id_b", "jaccard", "hamming")
     )
 
-
-# ----------------------------------------------------------- Arrow variant
-
-
-def make_jaccard_udf(cfg: DedupConfig = DEFAULT_CONFIG):
-    n = float(cfg.num_perms)
-
-    @pandas_udf("double")
-    def jaccard_est(ma: pd.Series, mb: pd.Series) -> pd.Series:
-        if len(ma) == 0:
-            return pd.Series([], dtype="float64")
-        A = np.vstack(ma.to_numpy())
-        B = np.vstack(mb.to_numpy())
-        return pd.Series((A == B).sum(axis=1) / n)
-
-    return jaccard_est
-
-
-def score_pairs_arrow(
-    pairs: DataFrame,
-    sketched: DataFrame,
-    cfg: DedupConfig = DEFAULT_CONFIG,
-    broadcast_sketches: bool = False,
-) -> DataFrame:
-    """Same contract as :func:`score_pairs`, Jaccard via one numpy batch op.
-    Kept for kernel A/B benchmarks; SQL wins by staying JVM-side."""
-    h = _hydrate(pairs, sketched, broadcast_sketches)
-    jac = make_jaccard_udf(cfg)(F.col("minhash_a"), F.col("minhash_b"))
-    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
-    return h.select(
-        "id_a", "id_b", jac.alias("jaccard_est"), ham.alias("hamming")
-    )

@@ -32,7 +32,7 @@ def fixture(spark):
         ids[(r.repo, r.path, r.commit)]: shingles_py(r.content)
         for r in pdf.itertuples()
     }
-    return pdf, truth, assignments, pairs, sh
+    return pdf, truth, assignments, pairs, sh, ids
 
 
 def _golden_pairs(sh):
@@ -46,7 +46,7 @@ def _golden_pairs(sh):
 
 
 def test_dup_pair_recall_against_exact_oracle(fixture):
-    pdf, truth, assignments, pairs, sh = fixture
+    pdf, truth, assignments, pairs, sh, ids = fixture
     golden = _golden_pairs(sh)
     assert golden, "fixture must plant golden pairs"
     cl = assignments.set_index("doc_id").cluster_id
@@ -60,7 +60,7 @@ def test_no_false_merges_below_half_jaccard(fixture):
     """Precision guard: no accepted near-dup pair with exact Jaccard < 0.5
     (the Hamming channel may legitimately accept slightly-below-threshold
     pairs, never wildly dissimilar ones)."""
-    pdf, truth, assignments, pairs, sh = fixture
+    pdf, truth, assignments, pairs, sh, ids = fixture
     nd = pairs[pairs["kind"] == "near_dup"]
     for r in nd.itertuples():
         a, b = sh[r.id_a], sh[r.id_b]
@@ -68,7 +68,7 @@ def test_no_false_merges_below_half_jaccard(fixture):
 
 
 def test_content_sha256_invariant_end_to_end(fixture):
-    pdf, truth, assignments, pairs, sh = fixture
+    pdf, truth, assignments, pairs, sh, ids = fixture
     expected = {
         hashlib.sha256(r.content.encode()).hexdigest() for r in pdf.itertuples()
     }
@@ -76,21 +76,46 @@ def test_content_sha256_invariant_end_to_end(fixture):
     assert len(assignments) == len(pdf)
 
 
+def _anchored_chunks(content: str) -> int:
+    """Distinct anchored chunks the fused sketch kernel derives from one
+    document: the substring channel pairs only documents sharing at least
+    ``substring_min_chunks`` of them."""
+    import pyarrow as pa
+
+    from duplicatesuricate_spark.functions import sketch as sk
+
+    a, b = sk._perm_constants(CFG)
+    flat, lens = sk._tokenize_hash_arrow(pa.array([content], type=pa.string()))
+    return int(sk._sketch_segments(flat, lens, CFG, a, b, True)["ch_lens"][0])
+
+
 def test_exact_substring_pairs_recalled(fixture):
-    pdf, truth, assignments, pairs, sh = fixture
+    """Every planted containment whose smaller (contained) document has at
+    least ``substring_min_chunks`` anchored chunks — the scope the substring
+    channel states — must land in one cluster with its container."""
+    pdf, truth, assignments, pairs, sh, ids = fixture
     cl = assignments.set_index("doc_id").cluster_id
-    # planted containment clusters must co-cluster
+    content = {ids[(r.repo, r.path, r.commit)]: r.content for r in pdf.itertuples()}
+    truth = truth.assign(doc_id=[ids[(r.repo, r.path, r.commit)] for r in truth.itertuples()])
     sub_clusters = truth[truth["kind"] == "exact_substring"]["cluster"].unique()
-    key2id = {}
-    for r in pdf.itertuples():
-        key2id[(r.repo, r.path, r.commit)] = None
+    assert len(sub_clusters) > 0, "fixture must plant containments"
+    in_scope, missed = 0, []
     for c in sub_clusters:
         grp = truth[truth["cluster"] == c]
-        assert len(grp) >= 2
+        inner = grp[grp["kind"] == "base"]["doc_id"].item()
+        for outer in grp[grp["kind"] == "exact_substring"]["doc_id"]:
+            assert content[inner] in content[outer]
+            if _anchored_chunks(content[inner]) < CFG.substring_min_chunks:
+                continue
+            in_scope += 1
+            if cl[inner] != cl[outer]:
+                missed.append((inner, outer))
+    assert in_scope > 0, "fixture must plant in-scope containments"
+    assert not missed, f"{len(missed)}/{in_scope} in-scope containments not co-clustered"
 
 
 def test_deterministic_rerun(spark, fixture):
-    pdf, truth, assignments, pairs, sh = fixture
+    pdf, truth, assignments, pairs, sh, ids = fixture
     corpus = with_doc_identity(spark.createDataFrame(pdf))
     again = dedup_pipeline(corpus).assignments.toPandas()
     a = assignments.sort_values("doc_id").reset_index(drop=True)
@@ -99,6 +124,6 @@ def test_deterministic_rerun(spark, fixture):
 
 
 def test_cluster_id_is_component_min(fixture):
-    pdf, truth, assignments, pairs, sh = fixture
+    pdf, truth, assignments, pairs, sh, ids = fixture
     grp = assignments.groupby("cluster_id")["doc_id"].min()
     assert (grp.index == grp.values).all()
