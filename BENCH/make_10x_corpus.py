@@ -2,24 +2,31 @@
 sf0.1 empirical distributions, with planted near/exact dups — same shape
 as the round-6 session's /root/scratch/sf1 validation corpus.
 
-Writes /root/scratch/sf1/{documents,embeddings}.parquet.
+    python BENCH/make_10x_corpus.py [SRC_DIR [OUT_DIR]]
+
+Reads SRC_DIR/{documents,embeddings}.parquet (an sf0.1 table set) and
+writes OUT_DIR/{documents,embeddings}.parquet; the defaults are the paths
+the round-6 corpus was built from and written to.
 """
 
 from __future__ import annotations
 
 import os
 import random
+import sys
 
 import numpy as np
 import pandas as pd
 import pyarrow.parquet as pq
 
+SRC = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 OUT = "/root/scratch/sf1"
+OUT = sys.argv[2] if len(sys.argv) > 2 else OUT
 os.makedirs(OUT, exist_ok=True)
 rng = random.Random(42)
 nprng = np.random.default_rng(42)
 
-docs = pq.read_table("/root/testdata/sf0.1/documents.parquet").to_pandas()
+docs = pq.read_table(f"{SRC}/documents.parquet").to_pandas()
 vocab_rows = docs["text"].tolist()
 
 N_DOCS = 50_000
@@ -60,7 +67,7 @@ pd.DataFrame(
     rows, columns=["doc_id", "text", "lang", "source", "n_chars"]
 ).to_parquet(f"{OUT}/documents.parquet", index=False)
 
-emb = pq.read_table("/root/testdata/sf0.1/embeddings.parquet").to_pandas()
+emb = pq.read_table(f"{SRC}/embeddings.parquet").to_pandas()
 dim = len(emb["embedding"].iloc[0])
 N_VEC = 20_000
 base_idx = nprng.integers(0, len(emb), N_VEC)

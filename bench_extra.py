@@ -30,14 +30,10 @@ def main() -> None:
     n_runs = int(os.environ.get("SPARK_GRAFT_EXTRA_RUNS", "3"))
     only = set(os.environ.get("SPARK_GRAFT_EXTRA_ONLY", "").split(",")) - {""}
 
-    from duplicatesuricate_spark.operators.dedup import (
-        dedup_pipeline, exact_dup_edges,
-    )
+    from duplicatesuricate_spark.operators.dedup import dedup_pipeline
     from duplicatesuricate_spark.operators.lsh import (
-        band_explode, candidate_pairs, portable_simhash,
-        portable_simhash_pairs, simhash_block_explode,
+        portable_simhash, portable_simhash_pairs,
     )
-    from duplicatesuricate_spark.operators.score import score_and_verify
     from duplicatesuricate_spark.operators.similarity import brute_force_topk
     from duplicatesuricate_spark.operators.substring import exact_substring_pairs
     from duplicatesuricate_spark.operators.textqa import (
@@ -45,11 +41,6 @@ def main() -> None:
         repetition_signals, token_counts,
     )
     from duplicatesuricate_spark.sources.corpus import documents_as_corpus
-    from duplicatesuricate_spark.functions.sketch import with_full_sketches
-    from duplicatesuricate_spark.functions.util import (
-        ensure_min_partitions, persist_level,
-    )
-    from duplicatesuricate_spark.config import DEFAULT_CONFIG
 
     spark = get_spark(app_name="dss-bench-extra", cores=cpus)
     sc = spark.sparkContext
@@ -82,73 +73,6 @@ def main() -> None:
             while owned:
                 owned.pop().unpersist()
         return _c
-
-    # ---- dedup_pipeline stage breakdown ----
-    def stage_exact():
-        owned: list = []
-        reps, edges = exact_dup_edges(corpus, persist=True, cache_registry=owned)
-        noop(edges)
-        return drain(owned)
-
-    def stage_sketch():
-        reps, _ = exact_dup_edges(corpus)
-        reps = ensure_min_partitions(reps)
-        sk = with_full_sketches(
-            reps, cfg=DEFAULT_CONFIG, with_chunks=True,
-            project=["doc_id", "content_sha256"],
-        )
-        noop(sk)
-        return None
-
-    def _sketched_persisted(owned):
-        reps, edges = exact_dup_edges(corpus, persist=True, cache_registry=owned)
-        reps = ensure_min_partitions(reps)
-        sk = with_full_sketches(
-            reps, cfg=DEFAULT_CONFIG, with_chunks=True,
-            project=["doc_id", "content_sha256"],
-        ).persist(persist_level())
-        owned.append(sk)
-        sk.count()
-        return sk, edges
-
-    def stage_cands():
-        owned: list = []
-        sk, _ = _sketched_persisted(owned)
-        bands = band_explode(sk, DEFAULT_CONFIG).unionByName(
-            simhash_block_explode(sk, DEFAULT_CONFIG))
-        cands = candidate_pairs(bands, DEFAULT_CONFIG, cache_registry=owned)
-        t0 = time.monotonic()
-        sc.setJobDescription("cands-only")
-        noop(cands)
-        print(f"[extra]   cands-after-sketch: {time.monotonic()-t0:.3f}s",
-              file=sys.stderr, flush=True)
-        return drain(owned)
-
-    def stage_score():
-        owned: list = []
-        sk, _ = _sketched_persisted(owned)
-        bands = band_explode(sk, DEFAULT_CONFIG).unionByName(
-            simhash_block_explode(sk, DEFAULT_CONFIG))
-        cands = candidate_pairs(bands, DEFAULT_CONFIG, cache_registry=owned)
-        near = score_and_verify(cands, sk, DEFAULT_CONFIG)
-        t0 = time.monotonic()
-        noop(near)
-        print(f"[extra]   score-after-sketch: {time.monotonic()-t0:.3f}s",
-              file=sys.stderr, flush=True)
-        return drain(owned)
-
-    def stage_substr_in_pipeline():
-        owned: list = []
-        sk, _ = _sketched_persisted(owned)
-        reps, _ = exact_dup_edges(corpus)
-        sub = exact_substring_pairs(
-            reps, DEFAULT_CONFIG, chunk_table=sk.select("doc_id", "chunks"),
-            cache_registry=owned)
-        t0 = time.monotonic()
-        noop(sub)
-        print(f"[extra]   substr-after-sketch: {time.monotonic()-t0:.3f}s",
-              file=sys.stderr, flush=True)
-        return drain(owned)
 
     def full_dedup():
         res = dedup_pipeline(corpus)
@@ -192,11 +116,6 @@ def main() -> None:
         noop(sh)
         return drain(owned)
 
-    timed("dedup/exact_edges", stage_exact)
-    timed("dedup/sketch", stage_sketch)
-    timed("dedup/cands", stage_cands)
-    timed("dedup/score", stage_score)
-    timed("dedup/substr", stage_substr_in_pipeline)
     timed("dedup/full", full_dedup)
     timed("text_suite", q_text)
     timed("ngram_jaccard", q_ngram)

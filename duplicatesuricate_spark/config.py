@@ -80,7 +80,6 @@ class DedupConfig:
     # collisions — see lsh.candidate_pairs) and only O(n) star edges are
     # emitted, never cliques
     mega_band_cap: int = 2048
-    salt_buckets: int = 16        # legacy knob, superseded by dynamic salts
 
     # --- execution strategy ---
     # tokenize inside the Arrow kernel (vectorized char-level numpy over
@@ -90,12 +89,6 @@ class DedupConfig:
     # differ between the two modes; both are internally consistent and the
     # planted-truth oracles are hash-agnostic.
     kernel_tokenize: bool = True
-    # consume content bytes straight from the Arrow string buffers via
-    # mapInArrow and emit sketches as zero-copy ListArrays (round-3 lever:
-    # the pandas-Series form materializes one Python bytes object per doc
-    # at the Arrow boundary — the measured ~170 s serial allocation term
-    # at 1M docs).  Only read when kernel_tokenize is on.
-    arrow_zero_copy: bool = True
 
     # --- identity (stage B1) ---
     # repair 64-bit doc_id collisions at pipeline entry (one key-only
@@ -107,9 +100,6 @@ class DedupConfig:
 
     # --- determinism ---
     seed: int = 0x5EED_CA7
-
-    # --- parallelism hints ---
-    shuffle_partitions: int = 32
 
     def __post_init__(self) -> None:
         if self.bands * self.rows_per_band != self.num_perms:

@@ -7,14 +7,12 @@ from duplicatesuricate_spark.functions.fuzzy_parity import (
 from duplicatesuricate_spark.functions.sketch import (
     minhash_simhash_py,
     with_full_sketches,
-    with_sketches,
 )
 from duplicatesuricate_spark.functions.text import with_shingles, with_tokens
 
 __all__ = [
     "with_tokens",
     "with_shingles",
-    "with_sketches",
     "with_full_sketches",
     "minhash_simhash_py",
     "fuzzy_exact",

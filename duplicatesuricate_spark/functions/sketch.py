@@ -2,9 +2,11 @@
 
 The reference's similarity channel is per-row Python fuzzywuzzy
 (duplicatesuricate/utils.py:99-113, 187-201, registered as row-at-a-time
-Spark UDFs at utils.py:116,204).  The recast replaces it with sketches
-computed in ONE Arrow-batched pandas UDF over the shingle arrays —
-vectorized numpy inside, zero per-row Python (BASELINE.json input_hint).
+Spark UDFs at utils.py:116,204).  The recast computes tokens, shingles,
+sketches and the substring pass's chunk hashes in ONE ``mapInArrow``
+kernel: vectorized numpy over each Arrow batch, zero per-row Python
+(BASELINE.json input_hint; "Accelerating Python UDFs in Vectorized Query
+Execution", CIDR'22).
 
 MinHash family: multiply-shift universal hashing on uint64 —
 ``h_i(x) = (a_i * x + b_i) mod 2^64 >> 33`` with odd seeded ``a_i``.
@@ -28,12 +30,6 @@ from pyspark.sql.functions import pandas_udf
 
 from duplicatesuricate_spark.config import DedupConfig, DEFAULT_CONFIG
 
-_SKETCH_SCHEMA = T.StructType([
-    T.StructField("minhash", T.ArrayType(T.IntegerType(), False), False),
-    T.StructField("simhash", T.LongType(), False),
-])
-
-
 def _perm_constants(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
     """Seeded (a, b) multiply-shift constants; a forced odd."""
     rng = np.random.RandomState(cfg.seed & 0x7FFFFFFF)
@@ -44,75 +40,6 @@ def _perm_constants(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
     hi = rng.randint(0, 1 << 32, size=cfg.num_perms).astype(np.uint64)
     b = (hi << np.uint64(32)) | lo
     return a, b
-
-
-def _sketch_batch(
-    shingle_lists: pd.Series, a: np.ndarray, b: np.ndarray, num_perms: int
-) -> pd.DataFrame:
-    """Vectorized over the whole Arrow batch: flatten every doc's shingles
-    into one array, hash per-perm, segment-reduce mins with
-    ``np.minimum.reduceat`` — no per-row Python loop over shingles."""
-    lens = shingle_lists.map(len).to_numpy(dtype=np.int64)
-    n_docs = len(lens)
-    if n_docs == 0:
-        return pd.DataFrame({"minhash": [], "simhash": []})
-    # empty shingle sets get one sentinel shingle so reduceat stays aligned
-    safe = np.maximum(lens, 1)
-    starts = np.concatenate(([0], np.cumsum(safe)[:-1]))
-    flat = np.empty(int(safe.sum()), dtype=np.uint64)
-    for i, lst in enumerate(shingle_lists):
-        s = starts[i]
-        if len(lst):
-            flat[s : s + len(lst)] = np.asarray(lst, dtype=np.int64).view(np.uint64)
-        else:
-            flat[s] = np.uint64(0)
-
-    # --- MinHash: per-perm multiply-shift, segmented min.  In-place ops on
-    # one reused buffer: allocation churn (not CPU) is what breaks scaling
-    # when 32 tasks run this concurrently ---
-    mins = np.empty((num_perms, n_docs), dtype=np.int32)
-    buf = np.empty_like(flat)
-    for p in range(num_perms):
-        np.multiply(flat, a[p], out=buf)
-        np.add(buf, b[p], out=buf)
-        np.right_shift(buf, np.uint64(33), out=buf)
-        mins[p] = np.minimum.reduceat(buf, starts).astype(np.int32)
-    minhash = list(np.ascontiguousarray(mins.T))
-
-    # --- SimHash: per-bit segmented popcount with an O(n) buffer (NEVER
-    # the (n, 64) matrix — that is gigabytes per wide batch) ---
-    ones = np.empty((64, n_docs), dtype=np.int64)
-    for bit in range(64):
-        np.right_shift(flat, np.uint64(bit), out=buf)
-        np.bitwise_and(buf, np.uint64(1), out=buf)
-        ones[bit] = np.add.reduceat(buf.view(np.int64), starts)
-    sig_bits = (2 * ones > safe[None, :]).astype(np.uint64)   # (64, n_docs)
-    shifts = np.arange(64, dtype=np.uint64)
-    simhash = (sig_bits << shifts[:, None]).sum(axis=0, dtype=np.uint64).view(np.int64)
-
-    return pd.DataFrame({"minhash": minhash, "simhash": simhash})
-
-
-def make_sketch_udf(cfg: DedupConfig = DEFAULT_CONFIG):
-    a, b = _perm_constants(cfg)
-    num_perms = cfg.num_perms
-
-    @pandas_udf(_SKETCH_SCHEMA)
-    def sketch(shingles: pd.Series) -> pd.DataFrame:
-        return _sketch_batch(shingles, a, b, num_perms)
-
-    return sketch
-
-
-def with_sketches(df: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> DataFrame:
-    """shingles array<long> -> + minhash array<int>, simhash long."""
-    sk = make_sketch_udf(cfg)(F.col("shingles"))
-    return (
-        df.withColumn("_sk", sk)
-        .withColumn("minhash", F.col("_sk.minhash"))
-        .withColumn("simhash", F.col("_sk.simhash"))
-        .drop("_sk")
-    )
 
 
 # ------------------------------------------------- fused full-sketch path
@@ -292,10 +219,9 @@ def _tokenize_hash_np(contents: pd.Series) -> tuple[np.ndarray, np.ndarray]:
     codegen path gets SLOWER with more cores (BENCH/BASELINE.md round-2
     controls), while this path is register/bandwidth-bound numpy.
 
-    NOTE: the per-doc ``encode``+``join`` below still materializes one
-    Python bytes object per doc; the pipeline hot path avoids this module
-    entirely via :func:`_tokenize_hash_arrow` (zero-copy Arrow offsets).
-    This form remains for pandas-Series callers and as the oracle twin.
+    NOTE: the per-doc ``encode``+``join`` below materializes one Python
+    bytes object per doc; the pipeline runs :func:`_tokenize_hash_arrow`
+    (zero-copy Arrow offsets) instead.  This form is its oracle twin.
     """
     n_docs = len(contents)
     first = contents.iloc[0] if n_docs else b""
@@ -416,36 +342,28 @@ def tokenize_hash_py(content: str) -> list[int]:
 
 
 def make_full_sketch_udf(cfg: DedupConfig = DEFAULT_CONFIG, with_chunks: bool = False):
-    """token_hashes array<long> -> struct(shingles, minhash, simhash
-    [, chunks]).
+    """Per-token hash array<long> -> struct(shingles, minhash, simhash
+    [, chunks]): the JVM-tokenize form of the kernel.
 
-    The ONLY JVM-side text work left is one xxhash64 per token; k-gram
-    hashing, per-doc dedup, MinHash, SimHash — and, with ``with_chunks``,
-    the exact-substring pass's anchored chunk hashes — all run vectorized
-    in numpy over the whole Arrow batch.  This exists because interpreted
-    higher-order-function evaluation of per-gram expressions is memory-
-    latency-bound and stops scaling past a few cores; the numpy kernel
-    streams linearly.
-
-    ``with_chunks`` replaces the old ``keep_token_hashes`` design: instead
-    of persisting the full per-token hash array (~8 bytes/token, the
-    sketch table's biggest column) so the substring pass can chunk later,
-    the ~n/anchor_mod chunk hashes are derived HERE, in the same pass —
-    ~16x fewer bytes persisted and shuffled for the same downstream
-    information, paid for with extra (perfectly parallel) vector math.
+    The ONLY JVM-side text work is one xxhash64 per token; k-gram hashing,
+    per-doc dedup, MinHash, SimHash — and, with ``with_chunks``, the
+    exact-substring pass's anchored chunk hashes — all run vectorized in
+    numpy over the whole Arrow batch.  Deriving the ~n/anchor_mod chunk
+    hashes HERE, instead of keeping the per-token array for the substring
+    pass, persists and shuffles ~16x fewer bytes.
     """
     a, b = _perm_constants(cfg)
     schema = _FULL_SCHEMA_CHUNKS if with_chunks else _FULL_SCHEMA
 
     @pandas_udf(schema)
-    def full_sketch(token_hashes: pd.Series) -> pd.DataFrame:
-        n_docs = len(token_hashes)
+    def full_sketch(hash_lists: pd.Series) -> pd.DataFrame:
+        n_docs = len(hash_lists)
         if n_docs == 0:
             return _empty_sketch_frame(with_chunks)
-        lens = token_hashes.map(len).to_numpy(dtype=np.int64)
+        lens = hash_lists.map(len).to_numpy(dtype=np.int64)
         flat = np.empty(int(lens.sum()), dtype=np.uint64)
         pos = 0
-        for lst in token_hashes:
+        for lst in hash_lists:
             m = len(lst)
             if m:
                 flat[pos : pos + m] = np.asarray(lst, dtype=np.int64).view(np.uint64)
@@ -453,27 +371,6 @@ def make_full_sketch_udf(cfg: DedupConfig = DEFAULT_CONFIG, with_chunks: bool = 
         return _sketch_from_flat(flat, lens, cfg, a, b, with_chunks)
 
     return full_sketch
-
-
-def make_content_sketch_udf(cfg: DedupConfig = DEFAULT_CONFIG,
-                            with_chunks: bool = False):
-    """content string -> struct(shingles, minhash, simhash [, chunks]) —
-    the fully-fused form: tokenization, token hashing, k-gram shingles,
-    MinHash, SimHash and substring chunks ALL inside one vectorized numpy
-    pass over the Arrow batch.  The JVM side ships raw content bytes and
-    nothing else (see _tokenize_hash_np for why this beats codegen
-    ``split(lower(...))`` on allocation-constrained hosts)."""
-    a, b = _perm_constants(cfg)
-    schema = _FULL_SCHEMA_CHUNKS if with_chunks else _FULL_SCHEMA
-
-    @pandas_udf(schema)
-    def content_sketch(contents: pd.Series) -> pd.DataFrame:
-        if len(contents) == 0:
-            return _empty_sketch_frame(with_chunks)
-        flat, lens = _tokenize_hash_np(contents)
-        return _sketch_from_flat(flat, lens, cfg, a, b, with_chunks)
-
-    return content_sketch
 
 
 def _empty_sketch_frame(with_chunks: bool) -> pd.DataFrame:
@@ -507,8 +404,11 @@ def _minhash_simhash_segments(
     a: np.ndarray, b: np.ndarray, num_perms: int,
 ) -> tuple[np.ndarray, np.ndarray]:
     """MinHash + SimHash over segment-grouped shingles (every segment must
-    be non-empty).  Returns (mins (num_perms, n_docs) int32, simhash int64).
-    Same arithmetic as :func:`_sketch_batch`, minus the list plumbing."""
+    be non-empty: the kernel gives an empty document one sentinel gram).
+    Returns (mins (num_perms, n_docs) int32, simhash int64).  In-place ops
+    on one reused buffer: allocation churn (not CPU) is what breaks scaling
+    when many tasks run this concurrently.  SimHash uses a per-bit
+    segmented popcount with an O(n) buffer, never the (n, 64) matrix."""
     n_docs = len(lens)
     if n_docs == 0:
         return (np.empty((num_perms, 0), dtype=np.int32),
@@ -581,8 +481,8 @@ def _sketch_from_flat(
     flat: np.ndarray, lens: np.ndarray, cfg: DedupConfig,
     a: np.ndarray, b: np.ndarray, with_chunks: bool,
 ) -> pd.DataFrame:
-    """pandas adapter over :func:`_sketch_segments` (the pandas-UDF paths;
-    the pipeline hot path uses the Arrow-native adapter instead)."""
+    """pandas adapter over :func:`_sketch_segments` (the JVM-tokenize
+    pandas UDF; the kernel-tokenize path uses the Arrow-native adapter)."""
     seg = _sketch_segments(flat, lens, cfg, a, b, with_chunks)
     sh64 = seg["sh_vals"].view(np.int64)
     cuts = np.cumsum(seg["sh_lens"])[:-1]
@@ -689,7 +589,6 @@ def sketch_map_in_arrow(
 
 def with_full_sketches(df: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
                        content_col: str = "content",
-                       keep_token_hashes: bool = False,
                        with_chunks: bool = False,
                        kernel_tokenize: bool | None = None,
                        project: list[str] | None = None) -> DataFrame:
@@ -697,57 +596,32 @@ def with_full_sketches(df: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
     (the pipeline's hot path).
 
     ``kernel_tokenize`` (default: cfg.kernel_tokenize) moves tokenization
-    itself into the numpy kernel — the JVM ships raw content and nothing
-    else.  Measured on this class of host, codegen ``split(lower(...))``
-    is allocation-bound and stops scaling past ~2 cores while the
-    vectorized char path stays register/bandwidth-bound
-    (BENCH/BASELINE.md).  The JVM form is kept for ``keep_token_hashes``
-    consumers and as the cross-engine-readable reference semantics.
+    itself into the numpy kernel (:func:`sketch_map_in_arrow`) — the JVM
+    ships raw content and nothing else.  Measured on this class of host,
+    codegen ``split(lower(...))`` is allocation-bound and stops scaling
+    past ~2 cores while the vectorized char path stays register/bandwidth-
+    bound (BENCH/BASELINE.md).  The JVM form is kept as the cross-engine-
+    readable reference semantics.
 
     ``with_chunks`` adds the exact-substring pass's anchored chunk hashes
-    (stage B9) as a ``chunks array<long>`` column — ~16x fewer bytes than
-    ``keep_token_hashes`` (which retains the full per-token ``th`` array)
-    for the same downstream use; prefer it on the pipeline path."""
+    (stage B9) as a ``chunks array<long>`` column.  ``project`` selects the
+    input columns carried next to the sketch columns (default: all)."""
+    if kernel_tokenize is None:
+        kernel_tokenize = cfg.kernel_tokenize
+    if kernel_tokenize:
+        return sketch_map_in_arrow(
+            df, cfg, content_col=content_col, with_chunks=with_chunks,
+            project=project,
+        )
     from duplicatesuricate_spark.functions.text import tokens_expr
 
-    if kernel_tokenize is None:
-        kernel_tokenize = getattr(cfg, "kernel_tokenize", False)
-    if kernel_tokenize and not keep_token_hashes:
-        if getattr(cfg, "arrow_zero_copy", True):
-            # the hot path: mapInArrow, zero per-doc Python objects in
-            # either direction (round-3 lever — see sketch_map_in_arrow)
-            return sketch_map_in_arrow(
-                df, cfg, content_col=content_col, with_chunks=with_chunks,
-                project=project,
-            )
-        # legacy pandas-Series form, kept for A/B probes: one bytes
-        # object per doc at the Arrow boundary
-        out = make_content_sketch_udf(cfg, with_chunks=with_chunks)(
-            F.col(content_col)
-        )
-        res = df.withColumn("_sk", out)
-    else:
-        th = F.transform(tokens_expr(content_col, cfg), lambda t: F.xxhash64(t))
-        out = make_full_sketch_udf(cfg, with_chunks=with_chunks)(F.col("th"))
-        res = df.withColumn("th", th).withColumn("_sk", out)
-    res = (
-        res.withColumn("shingles", F.col("_sk.shingles"))
-        .withColumn("minhash", F.col("_sk.minhash"))
-        .withColumn("simhash", F.col("_sk.simhash"))
-    )
-    if with_chunks:
-        res = res.withColumn("chunks", F.col("_sk.chunks"))
+    th = F.transform(tokens_expr(content_col, cfg), lambda t: F.xxhash64(t))
+    res = df.withColumn("_sk", make_full_sketch_udf(cfg, with_chunks=with_chunks)(th))
+    sketch_cols = ["shingles", "minhash", "simhash"] + (["chunks"] if with_chunks else [])
+    for c in sketch_cols:
+        res = res.withColumn(c, F.col(f"_sk.{c}"))
     res = res.drop("_sk")
-    if not keep_token_hashes and "th" in res.columns:
-        res = res.drop("th")
-    if project is not None:
-        sketch_cols = ["shingles", "minhash", "simhash"]
-        if with_chunks:
-            sketch_cols.append("chunks")
-        if keep_token_hashes:
-            sketch_cols.append("th")
-        res = res.select(*project, *sketch_cols)
-    return res
+    return res if project is None else res.select(*project, *sketch_cols)
 
 
 # ---------------------------------------------------------------- oracles

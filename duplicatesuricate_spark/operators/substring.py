@@ -44,35 +44,30 @@ from duplicatesuricate_spark.functions.text import tokens_expr
 
 
 def chunk_hashes(corpus: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> DataFrame:
-    """(doc_id, content | th | chunks) -> (doc_id, chunk_hash) distinct,
+    """(doc_id, content | chunks) -> (doc_id, chunk_hash) distinct,
     full-window, content-defined anchored chunks.
 
-    Three input shapes, cheapest first: a precomputed ``chunks`` column
-    (derived inside the fused Arrow sketch kernel — the pipeline path;
-    ~16x fewer persisted bytes than token hashes), a per-token hash array
-    ``th``, or raw ``content`` (tokenized here).  The th/content forms hash
-    chunks with ``xxhash64`` over token-hash slices — no 50-token string
-    concatenation per anchor (interpreted HOF + string building was the
-    pipeline's single most expensive stage before this).
+    Two input shapes: a precomputed ``chunks`` column (derived inside the
+    fused Arrow sketch kernel — the pipeline path), or raw ``content``
+    (tokenized here).  The content form hashes chunks with ``xxhash64``
+    over token-hash slices — no 50-token string concatenation per anchor
+    (interpreted HOF + string building was the pipeline's single most
+    expensive stage before this).
     """
     w = cfg.substring_window
     if "chunks" in corpus.columns:
         return corpus.select("doc_id", F.explode("chunks").alias("chunk_hash"))
-    if "th" in corpus.columns:
-        df = corpus.select("doc_id", "th")
-    else:
-        # raw-content path: deliberately NOT widened with a repartition —
-        # the JVM split(lower(...)) tokenizer is allocation-bound and
-        # anti-scales with concurrent tasks on this host class
-        # (BENCH/BASELINE.md round-2 controls; re-measured r06: widening
-        # to 32 tasks made this 1.7x SLOWER at 50k docs).  At real scale
-        # the scan is already wide and the question disappears; the
-        # pipeline path avoids JVM tokenization entirely (fused Arrow
-        # kernel chunks).
-        df = corpus.select(
-            "doc_id",
-            F.transform(tokens_expr("content", cfg), lambda t: F.xxhash64(t)).alias("th"),
-        )
+    # raw-content path: deliberately NOT widened with a repartition — the
+    # JVM split(lower(...)) tokenizer is allocation-bound and anti-scales
+    # with concurrent tasks on this host class (BENCH/BASELINE.md round-2
+    # controls; re-measured r06: widening to 32 tasks made this 1.7x
+    # SLOWER at 50k docs).  At real scale the scan is already wide and the
+    # question disappears; the pipeline path avoids JVM tokenization
+    # entirely (fused Arrow kernel chunks).
+    df = corpus.select(
+        "doc_id",
+        F.transform(tokens_expr("content", cfg), lambda t: F.xxhash64(t)).alias("th"),
+    )
     n = F.size("th")
     # anchor positions: token-hash % mod == 0 AND a full window fits;
     # documents shorter than the window produce no chunks (they are the
@@ -214,7 +209,6 @@ def verify_containment(
 
 def exact_substring_pairs(
     corpus: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
-    token_hashes: DataFrame | None = None,
     chunk_table: DataFrame | None = None,
     cache_registry: list | None = None,
 ) -> DataFrame:
@@ -222,13 +216,8 @@ def exact_substring_pairs(
 
     ``chunk_table`` (doc_id, chunks) — the anchored chunk hashes computed
     inside the fused sketch kernel and carried on the persisted sketch
-    table — lets the pass skip re-tokenizing AND re-chunking the corpus.
-    ``token_hashes`` (doc_id, th) is the heavier legacy carry."""
-    cand_src = (
-        chunk_table if chunk_table is not None
-        else token_hashes if token_hashes is not None
-        else corpus
-    )
+    table — lets the pass skip re-tokenizing AND re-chunking the corpus."""
+    cand_src = corpus if chunk_table is None else chunk_table
     verified = verify_containment(
         substring_candidates(cand_src, cfg, cache_registry=cache_registry),
         corpus, cfg,

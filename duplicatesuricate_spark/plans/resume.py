@@ -12,6 +12,11 @@ resume; the incremental module handles row-level deltas).
 A killed run leaves the incomplete stage without ``_SUCCESS``; the rerun
 recomputes exactly that stage and everything after it, producing
 byte-identical output (all stages are deterministic by construction).
+
+The stages themselves, and the config fields each one's output depends
+on, are ``operators.dedup._dedup_stages`` — the sequence ``dedup_pipeline``
+runs in memory.  ``CheckpointRunner.stage`` is this module's executor for
+it; ``run_dedup_checkpointed`` only wires the two together.
 """
 
 from __future__ import annotations
@@ -21,7 +26,6 @@ from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from duplicatesuricate_spark.config import DedupConfig, DEFAULT_CONFIG
 from duplicatesuricate_spark.plans.lineage import input_sha, partition_metrics
@@ -54,6 +58,10 @@ class CheckpointRunner:
         self.config_stamp = config_stamp
         self.executed: list[str] = []
         self.skipped: list[str] = []
+        # internal caches a stage's build persists (band buckets, chunk
+        # hashes): released as soon as that stage's parquet has landed, so
+        # a run leaks nothing into the session
+        self.caches: list[DataFrame] = []
         self._lineage: list[str] = []
 
     def _path(self, stage: str) -> Path:
@@ -89,8 +97,13 @@ class CheckpointRunner:
             self.skipped.append(name)
         else:
             t0 = time.monotonic()
-            df = build()
-            df.write.mode("overwrite").parquet(path)
+            try:
+                build().write.mode("overwrite").parquet(path)
+            finally:
+                # the stage has landed (or failed): the internal tables its
+                # build persisted are no longer needed
+                while self.caches:
+                    self.caches.pop().unpersist()
             wall_ms = int((time.monotonic() - t0) * 1000)
             out = self.spark.read.parquet(path)
             m = partition_metrics(out, name, sha, wall_ms, self.snapshot_id)
@@ -119,132 +132,17 @@ def run_dedup_checkpointed(
     cfg: DedupConfig = DEFAULT_CONFIG,
     snapshot_id: int = 0,
 ) -> dict[str, DataFrame]:
-    """The flagship pipeline, stage-materialized for kill/resume.
+    """The flagship pipeline, stage-materialized for kill/resume: the stage
+    sequence ``dedup_pipeline`` runs (``operators.dedup._dedup_stages``),
+    with every stage a parquet checkpoint under ``work_dir``.  Its
+    assignments and pairs equal the in-memory run's."""
+    from duplicatesuricate_spark.operators.dedup import _dedup_stages
 
-    Stage graph (each line one parquet checkpoint):
-        corpus_ids -> dup_map -> reps/exact_edges -> sketches ->
-        candidates -> near_pairs/substring_pairs -> all_pairs ->
-        assignments
-
-    Cache ownership: the internal DISK_ONLY tables ``candidate_pairs`` and
-    ``exact_substring_pairs`` persist (band-bucket table, chunk-hash table)
-    are collected in a local registry and released as soon as the stage
-    that needed them has landed its parquet — the runner leaks nothing into
-    the session (round-4 verdict item 1; batch and incremental paths
-    already threaded the registry).
-    """
-    from duplicatesuricate_spark.functions.sketch import with_full_sketches
-    from duplicatesuricate_spark.functions.util import ensure_min_partitions
-    from duplicatesuricate_spark.operators.dedup import exact_dup_map
-    from duplicatesuricate_spark.operators.lsh import (
-        band_explode, candidate_pairs, simhash_block_explode,
-    )
-    from duplicatesuricate_spark.operators.score import score_pairs, filter_dup_pairs
-    from duplicatesuricate_spark.operators.substring import exact_substring_pairs
-    from duplicatesuricate_spark.operators.components import (
-        connected_components, assignments_with_singletons,
-    )
-    from duplicatesuricate_spark.streaming.incremental import (
-        sketch_universe_fingerprint,
-    )
-
-    # per-stage identity stamps (round-4 advice): each stage folds only the
-    # config fields its output depends on.  corpus_ids / dup_map / reps /
-    # exact_edges are config-independent (stamp ""), so changing a
-    # threshold or the band geometry reuses them AND the sketch stage when
-    # the hash universe itself is unchanged.
-    universe = sketch_universe_fingerprint(cfg)
-    stamp_cand = input_sha(
-        "cand", cfg.bands, cfg.rows_per_band, cfg.simhash_blocks,
-        cfg.hot_band_cap, cfg.mega_band_cap, cfg.seed,
-    )
-    stamp_near = input_sha(
-        "near", cfg.jaccard_threshold, cfg.jaccard_margin,
-        cfg.hamming_threshold, cfg.num_perms,
-    )
-    stamp_sub = input_sha(
-        "sub", universe, cfg.substring_window, cfg.substring_anchor_mod,
-        cfg.substring_min_chunks, cfg.substring_containment,
-    )
     r = CheckpointRunner(spark, work_dir, snapshot_id)
-    owned: list = []
-
-    def drain() -> None:
-        while owned:
-            owned.pop().unpersist()
-
-    try:
-        corpus_ids = r.stage(
-            "corpus_ids", lambda: corpus.select("doc_id", "content_sha256"),
-            stamp="",
-        )
-        # the slim sha-window map is its OWN stage: reps and exact_edges
-        # below derive from its parquet, so the window's exchange executes
-        # once per work dir instead of once per derived stage (round-4
-        # verdict "what's wrong" item 2)
-        dup_map = r.stage("dup_map", lambda: exact_dup_map(corpus), stamp="")
-        reps = r.stage(
-            "reps",
-            lambda: corpus.join(dup_map.select("doc_id"), "doc_id", "left_anti"),
-            stamp="",
-        )
-        exact_edges = r.stage(
-            "exact_edges",
-            lambda: dup_map.select(
-                F.col("rep_id").alias("id_a"), F.col("doc_id").alias("id_b")
-            ),
-            stamp="",
-        )
-        sketches = r.stage(
-            "sketches",
-            lambda: with_full_sketches(ensure_min_partitions(reps), cfg=cfg).select(
-                "doc_id", "shingles", "minhash", "simhash"
-            ),
-            stamp=universe,
-        )
-        cands = r.stage(
-            "candidates",
-            lambda: candidate_pairs(
-                band_explode(sketches, cfg).unionByName(
-                    simhash_block_explode(sketches, cfg)
-                ),
-                cfg,
-                cache_registry=owned,
-            ),
-            stamp=stamp_cand,
-        )
-        drain()  # bucket table landed in the candidates parquet
-        near = r.stage(
-            "near_pairs",
-            lambda: filter_dup_pairs(score_pairs(cands, sketches, cfg), sketches, cfg),
-            stamp=stamp_near,
-        )
-        sub = r.stage(
-            "substring_pairs",
-            lambda: exact_substring_pairs(reps, cfg, cache_registry=owned),
-            stamp=stamp_sub,
-        )
-        drain()  # chunk-hash table landed in the substring parquet
-        all_pairs = r.stage(
-            "all_pairs",
-            lambda: near.select("id_a", "id_b")
-            .unionByName(sub.select("id_a", "id_b"))
-            .unionByName(exact_edges.select("id_a", "id_b"))
-            .distinct(),
-            stamp="",
-        )
-        assignments = r.stage(
-            "assignments",
-            lambda: assignments_with_singletons(
-                corpus_ids, connected_components(all_pairs)
-            ),
-            stamp="",
-        )
-    finally:
-        drain()
+    t = _dedup_stages(corpus, cfg, r.stage, r.caches)
     return {
-        "assignments": assignments,
-        "pairs": all_pairs,
+        "assignments": t["assignments"],
+        "pairs": t["all_pairs"],
         "metrics": r.metrics(),
         "_runner": r,
     }

@@ -199,9 +199,7 @@ def incremental_dedup(
     owned: list = [fresh_sk]
     cands = candidate_pairs(touched, cfg, cache_registry=owned)
     # fused estimate->prefilter->exact-verify (two hydration joins) — the
-    # same stage-B7 form the batch pipeline uses; the previous
-    # score_pairs + filter_dup_pairs pair hydrated the sketch table four
-    # times
+    # same stage-B7 form the batch pipeline uses
     new_pairs = score_and_verify(cands, all_sk, cfg)
 
     # previous components as star edges + new pairs -> re-converge

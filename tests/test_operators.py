@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from duplicatesuricate_spark.config import DedupConfig, DEFAULT_CONFIG
 from duplicatesuricate_spark.functions.text import with_shingles, shingles_py
-from duplicatesuricate_spark.functions.sketch import with_sketches, minhash_simhash_py
+from duplicatesuricate_spark.functions.sketch import minhash_simhash_py, with_full_sketches
 from duplicatesuricate_spark.functions.kernels import (
     exact_score,
     fuzzy_score,
@@ -19,7 +19,7 @@ from duplicatesuricate_spark.operators.lsh import (
     candidate_pairs,
     simhash_block_explode,
 )
-from duplicatesuricate_spark.operators.score import score_pairs, filter_dup_pairs
+from duplicatesuricate_spark.operators.score import score_and_verify
 from duplicatesuricate_spark.operators.components import (
     connected_components,
     assignments_with_singletons,
@@ -71,13 +71,17 @@ def test_spark_shingles_match_python_oracle_counts(spark):
 
 
 def test_sketch_udf_matches_python_oracle(spark):
+    """Every sketch the Arrow kernel returns through Spark is the bigint
+    oracle's sketch of the shingle set it returns beside it."""
     rng = random.Random(3)
-    lists = [[rng.randint(-(2**62), 2**62) for _ in range(rng.randint(1, 30))]
+    words = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta"]
+    texts = [" ".join(rng.choice(words) for _ in range(rng.randint(0, 30)))
              for _ in range(8)]
-    df = spark.createDataFrame([(l,) for l in lists], "shingles array<long>")
-    rows = with_sketches(df).select("minhash", "simhash").collect()
-    for lst, r in zip(lists, rows):
-        mh, sh = minhash_simhash_py(lst)
+    df = spark.createDataFrame([(t,) for t in texts], "content string")
+    rows = with_full_sketches(df).select("shingles", "minhash", "simhash").collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        mh, sh = minhash_simhash_py(list(r["shingles"]))
         assert list(r["minhash"]) == mh
         assert r["simhash"] == sh
 
@@ -86,8 +90,7 @@ def test_sketch_udf_matches_python_oracle(spark):
 
 
 def _sketch_df(spark, docs):
-    df = spark.createDataFrame(docs, "doc_id long, content string")
-    return with_sketches(with_shingles(df))
+    return with_full_sketches(spark.createDataFrame(docs, "doc_id long, content string"))
 
 
 def test_band_explode_shape(spark):
@@ -121,7 +124,7 @@ def test_simhash_block_channel_catches_small_hamming(spark):
 def test_hot_bucket_star_preserves_connectivity(spark):
     """A bucket over the hot cap emits O(m) star edges that still connect
     every member into one component."""
-    cfg = DedupConfig(hot_band_cap=4, salt_buckets=3)
+    cfg = DedupConfig(hot_band_cap=4)
     n = 20
     docs = [(i, "identical content for everyone in this hot bucket row") for i in range(n)]
     sk = _sketch_df(spark, docs)
@@ -136,14 +139,14 @@ def test_hot_bucket_star_preserves_connectivity(spark):
 # ------------------------------------------------------------------ scoring
 
 
-def test_score_pairs_exact_match_is_one(spark):
+def test_score_and_verify_exact_match_is_one(spark):
     sk = _sketch_df(spark, [(1, "w x y z a b c d e f"), (2, "w x y z a b c d e f")])
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    r = score_pairs(pairs, sk).collect()[0]
-    assert r["jaccard_est"] == 1.0 and r["hamming"] == 0
+    r = score_and_verify(pairs, sk).collect()[0]
+    assert r["jaccard"] == 1.0 and r["hamming"] == 0
 
 
-def test_filter_dup_pairs_exact_verification(spark):
+def test_score_and_verify_exact_verification(spark):
     """Acceptance decisions are made on EXACT Jaccard, so a pair whose
     estimate is inflated but true Jaccard is low must be rejected."""
     docs = [(1, " ".join(f"tok{i}" for i in range(40))),
@@ -151,8 +154,7 @@ def test_filter_dup_pairs_exact_verification(spark):
                 " ".join(f"other{i}" for i in range(20)))]
     sk = _sketch_df(spark, docs)
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    scored = score_pairs(pairs, sk)
-    out = filter_dup_pairs(scored, sk).collect()
+    out = score_and_verify(pairs, sk).collect()
     assert out == []  # true jaccard ~ 0.3 << 0.85 and hamming large
 
 

@@ -1,14 +1,13 @@
 """Property-based tests (hypothesis) for the pure kernels — no Spark."""
 
 import numpy as np
-import pandas as pd
 from hypothesis import given, settings, strategies as st
 
 from duplicatesuricate_spark.config import DEFAULT_CONFIG
 from duplicatesuricate_spark.functions.sketch import (
     _gram_hashes,
+    _minhash_simhash_segments,
     _perm_constants,
-    _sketch_batch,
 )
 from duplicatesuricate_spark.functions.text import shingles_py
 
@@ -17,13 +16,22 @@ _A, _B = _perm_constants(DEFAULT_CONFIG)
 int64s = st.integers(min_value=-(2**63), max_value=2**63 - 1)
 
 
+def _sketch(lists):
+    """(minhash (num_perms, n) int32, simhash (n,)) of non-empty int64
+    lists through the pipeline's segment kernel."""
+    lens = np.array([len(x) for x in lists], dtype=np.int64)
+    flat = np.array([v for x in lists for v in x], dtype=np.int64).view(np.uint64)
+    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
+    return _minhash_simhash_segments(flat, starts, lens, _A, _B,
+                                     DEFAULT_CONFIG.num_perms)
+
+
 @settings(max_examples=25, deadline=None)
 @given(st.lists(int64s, min_size=1, max_size=200))
 def test_minhash_identical_input_identical_sketch(xs):
-    out = _sketch_batch(pd.Series([xs, list(reversed(xs))]), _A, _B,
-                        DEFAULT_CONFIG.num_perms)
-    assert list(out["minhash"][0]) == list(out["minhash"][1])
-    assert out["simhash"][0] == out["simhash"][1]
+    mins, simhash = _sketch([xs, list(reversed(xs))])
+    assert list(mins[:, 0]) == list(mins[:, 1])
+    assert simhash[0] == simhash[1]
 
 
 @settings(max_examples=15, deadline=None)
@@ -35,9 +43,8 @@ def test_minhash_estimate_within_statistical_bound(a, b):
     """|est - exact| <= 5 sigma for 128 perms (sigma <= 0.0442)."""
     sa, sb = set(a), set(b)
     exact = len(sa & sb) / len(sa | sb)
-    out = _sketch_batch(pd.Series([list(sa), list(sb)]), _A, _B,
-                        DEFAULT_CONFIG.num_perms)
-    est = float(np.mean(np.array(out["minhash"][0]) == np.array(out["minhash"][1])))
+    mins, _ = _sketch([list(sa), list(sb)])
+    est = float(np.mean(mins[:, 0] == mins[:, 1]))
     assert abs(est - exact) <= 5 * 0.0442 + 1e-9
 
 

@@ -29,31 +29,61 @@ def _assign_pdf(df):
     )
 
 
+def _pairs_pdf(df):
+    return (
+        df.select("id_a", "id_b", "jaccard", "hamming", "kind")
+        .toPandas()
+        .sort_values(["id_a", "id_b"])
+        .reset_index(drop=True)
+    )
+
+
 def test_checkpointed_run_matches_in_memory_pipeline(spark, corpus, tmp_path_factory):
     wd = str(tmp_path_factory.mktemp("ckpt_a"))
     out = run_dedup_checkpointed(spark, corpus, wd)
-    a = _assign_pdf(out["assignments"])
-    b = _assign_pdf(dedup_pipeline(corpus).assignments)
-    assert a.equals(b)
+    res = dedup_pipeline(corpus)
+    assert _assign_pdf(out["assignments"]).equals(_assign_pdf(res.assignments))
+    assert _pairs_pdf(out["pairs"]).equals(_pairs_pdf(res.pairs))
     # metrics exist for every executed stage, with per-partition rows
     m = out["metrics"].toPandas()
     assert set(m["stage"]) >= {"sketches", "candidates", "assignments"}
     assert (m["rows_out"] >= 0).all() and m["wall_ms"].notna().all()
 
 
+def test_checkpointed_matches_in_memory_with_substring_pairs(spark, tmp_path_factory):
+    """A corpus whose substring channel pairs several containments: the
+    checkpointed run chunks, verifies and scores exactly as the in-memory
+    run does."""
+    pdf, _ = synth_corpus(n_rows=400, seed=7)
+    corpus = with_doc_identity(spark.createDataFrame(pdf))
+    out = run_dedup_checkpointed(spark, corpus, str(tmp_path_factory.mktemp("ckpt_s")))
+    res = dedup_pipeline(corpus)
+    mem = _pairs_pdf(res.pairs)
+    assert (mem["kind"] == "exact_substring").sum() >= 5
+    assert _pairs_pdf(out["pairs"]).equals(mem)
+    assert _assign_pdf(out["assignments"]).equals(_assign_pdf(res.assignments))
+    res.unpersist()
+
+
 def test_kill_and_resume_is_byte_identical_and_skips(spark, corpus, tmp_path_factory):
     wd = Path(str(tmp_path_factory.mktemp("ckpt_b")))
     first = run_dedup_checkpointed(spark, corpus, str(wd))
+    stages = first["_runner"].executed
+    assert len(stages) == 10
     golden = _assign_pdf(first["assignments"])
+    golden_pairs = _pairs_pdf(first["pairs"])
 
-    # simulate a kill after the 'candidates' stage: later stages lost
-    for stage in ["near_pairs", "substring_pairs", "all_pairs", "assignments"]:
-        shutil.rmtree(wd / stage, ignore_errors=True)
-    second = run_dedup_checkpointed(spark, corpus, str(wd))
-    r = second["_runner"]
-    assert "sketches" in r.skipped and "candidates" in r.skipped
-    assert "assignments" in r.executed
-    assert _assign_pdf(second["assignments"]).equals(golden)
+    # simulate a kill at every stage boundary: the stage in flight lost its
+    # _SUCCESS marker mid-write, the stages after it never started
+    for k, stage in enumerate(stages):
+        (wd / stage / "_SUCCESS").unlink()
+        for later in stages[k + 1:]:
+            shutil.rmtree(wd / later)
+        again = run_dedup_checkpointed(spark, corpus, str(wd))
+        r = again["_runner"]
+        assert r.skipped == stages[:k] and r.executed == stages[k:], stage
+        assert _assign_pdf(again["assignments"]).equals(golden), stage
+        assert _pairs_pdf(again["pairs"]).equals(golden_pairs), stage
 
     # full rerun over a complete work dir: everything skipped
     third = run_dedup_checkpointed(spark, corpus, str(wd))

@@ -18,7 +18,6 @@ from duplicatesuricate_spark.functions.sketch import (
     with_full_sketches,
 )
 from duplicatesuricate_spark.sources.corpus import with_doc_identity
-from duplicatesuricate_spark.sources.synth import synth_corpus
 
 
 # ------------------------------------------ zero-copy Arrow tokenizer
@@ -60,27 +59,6 @@ def test_long_token_tail_window_breaks_prefix_collisions():
     a = tokenize_hash_py("p" * 64 + "AAAAAAAAAAA" + "z")
     b = tokenize_hash_py("p" * 64 + "BBBBBBBBBBB" + "z")
     assert a != b
-
-
-def test_arrow_zero_copy_matches_pandas_path(spark):
-    """The mapInArrow hot path and the pandas-UDF fallback must produce
-    byte-identical sketch tables (same hash universe, same segment math)."""
-    pdf, _ = synth_corpus(n_rows=60, seed=13)
-    corpus = with_doc_identity(spark.createDataFrame(pdf))
-
-    def table(zero_copy):
-        cfg = DEFAULT_CONFIG.with_(arrow_zero_copy=zero_copy)
-        return (
-            with_full_sketches(corpus, cfg=cfg, with_chunks=True,
-                               project=["doc_id"])
-            .toPandas().set_index("doc_id").sort_index()
-        )
-
-    za, pz = table(True), table(False)
-    assert list(za["simhash"]) == list(pz["simhash"])
-    for col in ("shingles", "minhash", "chunks"):
-        for x, y in zip(za[col], pz[col]):
-            assert list(x) == list(y), col
 
 
 def test_map_in_arrow_project_prunes_worker_input(spark):

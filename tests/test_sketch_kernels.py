@@ -1,29 +1,36 @@
 """Tier-1 kernel tests: pure functions, no Spark session.
 
-Pins the sketch arithmetic (numpy batch kernel == bigint oracle), the
+Pins the sketch arithmetic (the pipeline's numpy segment kernel == bigint
+oracle, empty documents included), the
 MinHash estimator's statistical contract, and shingle determinism.
 """
 
 import random
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from duplicatesuricate_spark.config import DedupConfig, DEFAULT_CONFIG
 from duplicatesuricate_spark.functions.sketch import (
+    _minhash_simhash_segments,
     _perm_constants,
-    _sketch_batch,
+    _sketch_segments,
     minhash_simhash_py,
 )
 from duplicatesuricate_spark.functions.text import shingles_py
 
+_A, _B = _perm_constants(DEFAULT_CONFIG)
+
 
 def _batch(shingle_lists):
-    a, b = _perm_constants(DEFAULT_CONFIG)
-    return _sketch_batch(
-        pd.Series(shingle_lists), a, b, DEFAULT_CONFIG.num_perms
-    )
+    """Sketch non-empty shingle lists with the pipeline's segment kernel;
+    -> (minhash row per list, simhash per list)."""
+    lens = np.array([len(x) for x in shingle_lists], dtype=np.int64)
+    flat = np.array([v for x in shingle_lists for v in x], dtype=np.int64).view(np.uint64)
+    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
+    mins, simhash = _minhash_simhash_segments(
+        flat, starts, lens, _A, _B, DEFAULT_CONFIG.num_perms)
+    return [list(map(int, m)) for m in mins.T], [int(h) for h in simhash]
 
 
 def test_numpy_kernel_matches_bigint_oracle():
@@ -31,12 +38,30 @@ def test_numpy_kernel_matches_bigint_oracle():
     lists = [
         [rng.randint(-(2**63), 2**63 - 1) for _ in range(rng.randint(1, 50))]
         for _ in range(20)
-    ] + [[]]
-    out = _batch(lists)
+    ]
+    minhash, simhash = _batch(lists)
     for i, lst in enumerate(lists):
         mh, sh = minhash_simhash_py(lst)
-        assert list(out["minhash"].iloc[i]) == mh, f"minhash mismatch row {i}"
-        assert int(out["simhash"].iloc[i]) == sh, f"simhash mismatch row {i}"
+        assert minhash[i] == mh, f"minhash mismatch row {i}"
+        assert simhash[i] == sh, f"simhash mismatch row {i}"
+
+
+def test_empty_document_gets_sentinel_shingle():
+    """An empty document between two others gets one sentinel gram (hash
+    0): its sketch is the oracle's empty-set sketch and its neighbours'
+    segments stay aligned."""
+    docs = [list(range(1, 9)), [], [11, 12, 13]]
+    lens = np.array([len(d) for d in docs], dtype=np.int64)
+    flat = np.array([t for d in docs for t in d], dtype=np.uint64)
+    seg = _sketch_segments(flat, lens, DEFAULT_CONFIG, _A, _B, False)
+    assert list(seg["sh_lens"]) == [4, 1, 1]
+    cuts = np.cumsum(seg["sh_lens"])[:-1]
+    shingles = np.split(seg["sh_vals"].view(np.int64), cuts)
+    assert list(shingles[1]) == [0]
+    for i, sh in enumerate(shingles):
+        mh, sim = minhash_simhash_py([int(x) for x in sh])
+        assert list(map(int, seg["mins"][:, i])) == mh, i
+        assert int(seg["simhash"][i]) == sim, i
 
 
 def test_minhash_estimates_jaccard():
@@ -48,17 +73,16 @@ def test_minhash_estimates_jaccard():
         a = set(rng.sample(universe, 250))
         b = set(rng.sample(universe, 250))
         exact = len(a & b) / len(a | b)
-        out = _batch([list(a), list(b)])
-        ma, mb = out["minhash"].iloc[0], out["minhash"].iloc[1]
+        (ma, mb), _ = _batch([list(a), list(b)])
         est = float(np.mean(np.array(ma) == np.array(mb)))
         assert abs(est - exact) < 0.18
 
 
 def test_identical_sets_estimate_one():
     s = [random.Random(1).getrandbits(63) for _ in range(30)]
-    out = _batch([s, list(reversed(s))])
-    assert list(out["minhash"].iloc[0]) == list(out["minhash"].iloc[1])
-    assert int(out["simhash"].iloc[0]) == int(out["simhash"].iloc[1])
+    (m0, m1), (h0, h1) = _batch([s, list(reversed(s))])
+    assert m0 == m1
+    assert h0 == h1
 
 
 def test_simhash_hamming_tracks_overlap():
@@ -70,8 +94,8 @@ def test_simhash_hamming_tracks_overlap():
         vals = []
         for _ in range(5):
             other = base[:-replace_n] + [rng.getrandbits(63) for _ in range(replace_n)]
-            out = _batch([base, other])
-            x = int(out["simhash"].iloc[0]) ^ int(out["simhash"].iloc[1])
+            _, (h0, h1) = _batch([base, other])
+            x = h0 ^ h1
             vals.append(bin(x & (2**64 - 1)).count("1"))
         return sum(vals) / len(vals)
 
