@@ -37,8 +37,7 @@ def main() -> None:
     # rows were measured unpinned).
     if os.environ.get("SPARK_GRAFT_PIN_CPUS", "1") != "0":
         os.sched_setaffinity(0, set(range(cores)))
-    spark = get_spark(app_name=f"scaling-{cores}", cores=cores,
-                      shuffle_partitions=cores * 2)
+    spark = get_spark(app_name=f"scaling-{cores}", cores=cores)
     corpus = with_doc_identity(spark.read.parquet(corpus_path))
     # warm up: JVM, codegen, AND the input pages.  A bare count() is
     # satisfied from parquet row-group metadata, so without the content
